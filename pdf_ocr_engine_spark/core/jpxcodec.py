@@ -1331,6 +1331,10 @@ def _parse_markers(cs: bytes) -> tuple[dict, list[bytearray]]:
             break
         if marker == 0xFF93:
             raise JpxError("SOD before SOT")
+        if bodies and marker in (0xFF51, 0xFF52, 0xFF5C, 0xFF5D):
+            # main-header-only markers (T.800 A.3): one between tile-parts
+            # would retroactively change how every tile decodes
+            raise JpxError(f"main-header marker 0x{marker:04X} after SOT")
         if pos + 4 > n:
             raise JpxError("truncated codestream header")
         (ln,) = struct.unpack_from(">H", cs, pos + 2)

@@ -31,6 +31,7 @@ from ..core.layout_fast import page_layout_fast
 from ..core.pdfbin import decode_pdf_arrays
 from ..core.pdfcrypt import EncryptedPdfError
 from ..core.pdfwrite import build_searchable_pdf
+from ..zipguard import install_zip_guard
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -148,6 +149,7 @@ def assemble_searchable(df: DataFrame,
     opts = options or DEFAULT_OPTIONS
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        install_zip_guard()
         import pandas as pd
 
         # per-task init point: the recognizer (model) builds once here

@@ -2,7 +2,7 @@
 
 ``extract_pages(df)`` maps the Common-Crawl-style pages DataFrame
 ``(url, warc_ts, html, text, lang, ...)`` to the extracted-output DataFrame
-with one ``mapInPandas`` in **iterator form**: per-task init happens once and
+with one ``mapInArrow`` in **iterator form**: per-task init happens once and
 is amortized over all Arrow batches — the Spark analog of the reference's
 singleton OCR worker reused across pages (``src/lib/ocr/index.ts:99-103``,
 the "64x faster" design note in its README).
@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from ..core.extract_doc import DEFAULT_OPTIONS, ExtractOptions, extract_document
+from ..zipguard import install_zip_guard
 
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
@@ -126,6 +127,7 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
     audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
 
     def run(batches):
+        install_zip_guard()
         import pyarrow as pa
 
         ctx = TaskContext.get()
@@ -181,6 +183,7 @@ def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
     audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        install_zip_guard()
         import pandas as pd  # executor-side import
 
         ctx = TaskContext.get()

@@ -46,6 +46,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..zipguard import install_zip_guard
+
 if TYPE_CHECKING:  # pragma: no cover
     import pandas as pd
 
@@ -266,6 +268,7 @@ def media_metadata(df: DataFrame, media_col: str = "media",
         [StructField(id_col, LongType(), False)] + list(MEDIA_META_SCHEMA))
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        install_zip_guard()
         import pandas as pd
 
         for batch in batches:
@@ -301,6 +304,7 @@ def frame_sample(df: DataFrame, every_ms: int = 1000,
     ])
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        install_zip_guard()
         import pandas as pd
 
         for batch in batches:
@@ -366,6 +370,7 @@ def resize_images(df: DataFrame, width: int, height: int,
     ])
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        install_zip_guard()
         import numpy as np
         import pandas as pd
 
@@ -419,6 +424,7 @@ def embed_media(df: DataFrame, dim: int = 64, media_col: str = "media",
     magics = (IMG_MAGIC, AUD_MAGIC, VID_MAGIC)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        install_zip_guard()
         import numpy as np
         import pandas as pd
 

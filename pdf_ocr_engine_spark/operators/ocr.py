@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..core.extract_doc import DEFAULT_OPTIONS, ExtractOptions
+from ..zipguard import install_zip_guard
 from .extract import extract_pages
 
 __all__ = [
@@ -116,7 +117,8 @@ def deterministic_recognizer():
             return words
         # /Decode [1 0] (per component) remaps samples to the inverted
         # range (inverted B/W scans carry it); default is identity.
-        # Computed up front so EVERY codec branch honours it.
+        # Computed up front so every codec branch honours it, except
+        # JPXDecode: ISO 32000-1 Table 89 and pdf.js ignore /Decode there.
         inverted = _decode_inverts(image.get("decode"))
         if image.get("filter") == "DCTDecode" or data[:2] == b"\xFF\xD8":
             try:
@@ -164,8 +166,6 @@ def deterministic_recognizer():
             except JpxError as exc:
                 raise ValueError(
                     f"undecodable JPEG 2000 page image: {exc}") from exc
-            if inverted:
-                gray = 255 - gray
             gh, gw = gray.shape
             return recognize_gray(gw, gh, gray.tobytes())
         if image.get("filter") == "JBIG2Decode":
@@ -260,6 +260,7 @@ def with_needs_ocr(df: DataFrame) -> DataFrame:
         + [StructField("needs_ocr", BooleanType(), False)])
 
     def run(batches):
+        install_zip_guard()
         import pyarrow as pa
 
         for b in batches:

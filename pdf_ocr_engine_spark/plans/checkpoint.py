@@ -13,8 +13,10 @@ implements it (SURVEY.md §4):
   ordering: a crash between data-write and manifest leaves the bucket
   unmanifested, so the re-run reprocesses it after clearing the orphan
   partition dir — never lost, never silently partial);
-* a re-run lists manifests and skips completed buckets entirely (the filter
-  prunes them at the scan).
+* a re-run lists manifests and skips completed buckets: they are never
+  extracted or written.  The bucket filter is a ``DataFilter`` on a computed
+  column, not a pushed scan filter, so every chunk still reads the whole
+  input table and drops the other buckets' rows after the scan.
 
 At 10^12 documents the manifest table is ``n_buckets`` tiny JSON files — list
 it on the driver in O(n_buckets); data-file listing is never needed.

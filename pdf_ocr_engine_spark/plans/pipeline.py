@@ -4,7 +4,7 @@ The job DAG (SURVEY.md §7.0), equivalent in role to the reference's
 orchestrating driver ``convertPdfToSearchable`` (``src/lib/ocr/index.ts:27-173``)
 but expressed as DataFrame stages:
 
-    pages ──salted repartition──▶ extract (mapInPandas, narrow)
+    pages ──salted repartition──▶ extract (mapInArrow, narrow)
           ──▶ output table  +  per-partition metrics table
 
 Shuffle inventory (what the 100 TB plan pays for):

@@ -31,6 +31,7 @@ from .operators.extract import extract_pages
 from .operators.multimodal import media_metadata
 from .plans.cache import release_tracked, track
 from .sources.testdata import lang3_col, pages_from_documents
+from .zipguard import install_zip_guard
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -256,6 +257,7 @@ def q_assemble_overlay(spark: SparkSession, sf_dir: str) -> DataFrame:
     ])
 
     def verify(batches):
+        install_zip_guard()
         import re as _re
 
         import pandas as pd

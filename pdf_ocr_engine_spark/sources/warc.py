@@ -47,6 +47,7 @@ from typing import Any, BinaryIO
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..zipguard import install_zip_guard
 from .schemas import PAGES_SCHEMA
 
 __all__ = ["PAGES_SCHEMA", "parse_warc", "parse_warc_stream", "http_body",
@@ -384,6 +385,7 @@ def warc_pages(spark: SparkSession, path: str) -> DataFrame:
     task memory is the record-size cap, never the archive size."""
 
     def run(batches):
+        install_zip_guard()
         import pyarrow as pa
 
         def flush(urls, tss, payloads):
@@ -451,6 +453,7 @@ def warc_scan_report(spark: SparkSession, path: str) -> DataFrame:
     ])
 
     def run(batches):
+        install_zip_guard()
         import pyarrow as pa
 
         for b in batches:

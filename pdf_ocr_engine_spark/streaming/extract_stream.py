@@ -9,7 +9,7 @@ variant for a landing zone that keeps receiving WARC-derived page files:
 
 Design notes (Spark-first):
 
-* the extraction operator is IDENTICAL to the batch one (``mapInPandas`` is
+* the extraction operator is IDENTICAL to the batch one (``mapInArrow`` is
   streaming-compatible) — one code path, two drivers;
 * exactly-once: the file source records consumed files and the parquet sink
   commits atomically per micro-batch into the checkpoint's write-ahead log —

@@ -712,6 +712,21 @@ class TestTilePartMarkers:
         with pytest.raises(JpxUnsupported):
             decode_jpx_gray(with_marker(poc))
 
+    @pytest.mark.parametrize("marker", [b"\xffQ", b"\xff\x52", b"\xff\x5c"],
+                             ids=["SIZ", "COD", "QCD"])
+    def test_main_header_marker_between_tile_parts_rejected(self, marker):
+        # SIZ/COD/QCD belong to the main header (T.800 A.3); a copy
+        # spliced between tile-parts must not silently re-parameterize
+        img = _rng(101).integers(0, 256, (16, 24), dtype=np.uint8)
+        raw = encode_jp2_gray(img, levels=1, tile=8, wrap_jp2=False)
+        assert np.array_equal(decode_jpx_gray(raw), img)
+        seg = raw.index(marker)
+        seg_end = seg + 2 + struct.unpack_from(">H", raw, seg + 2)[0]
+        second_sot = raw.index(b"\xff\x90", raw.index(b"\xff\x90") + 2)
+        spliced = raw[:second_sot] + raw[seg:seg_end] + raw[second_sot:]
+        with pytest.raises(JpxError, match="after SOT"):
+            decode_jpx_gray(spliced)
+
     def test_ocr_extraction_through_precinct_jpx_pdf(self):
         from pdf_ocr_engine_spark.core.extract_doc import extract_document
         from pdf_ocr_engine_spark.core.pdfscan import build_pixel_scanned_pdf

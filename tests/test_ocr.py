@@ -484,9 +484,10 @@ class TestGray1Raster:
 
 
 class TestInvertedDecodeAllCodecs:
-    """/Decode [1 0] must be honoured in EVERY codec branch, not only
-    the raw-raster paths, and it must XOR with CCITT /BlackIs1 (the two
-    inversions cancel, as a renderer composes them)."""
+    """/Decode [1 0] must be honoured in every codec branch except
+    JPXDecode, not only the raw-raster paths, and it must XOR with CCITT
+    /BlackIs1 (the two inversions cancel, as a renderer composes them).
+    ISO 32000-1 Table 89 and pdf.js ignore /Decode for JPXDecode images."""
 
     @staticmethod
     def _render(w=64, h=20):
@@ -561,6 +562,21 @@ class TestInvertedDecodeAllCodecs:
              "decode": (1.0, 0.0), "width": w, "height": h,
              "colorspace": "DeviceGray", "bpc": 8})
         assert [x[0] for x in words] == ["ok"]
+
+    def test_jpx_ignores_decode_array(self):
+        from pdf_ocr_engine_spark.core.jpxcodec import encode_jp2_gray
+        from pdf_ocr_engine_spark.operators.ocr import (
+            deterministic_recognizer,
+        )
+
+        w, h, gray = self._render()
+        image = {"data": encode_jp2_gray(gray), "filter": "JPXDecode",
+                 "decode_parms": None, "width": w, "height": h,
+                 "colorspace": "DeviceGray", "bpc": 8}
+        recognize = deterministic_recognizer()
+        plain = recognize({**image, "decode": None})
+        assert [x[0] for x in plain] == ["ok"]
+        assert recognize({**image, "decode": (1.0, 0.0)}) == plain
 
 
 class TestRobustRecognizer:
