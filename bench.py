@@ -249,8 +249,7 @@ def main() -> int:
                 .repartition(cpus * 2).write.mode("overwrite") \
                 .parquet(mix_path)
         mixed_pages = spark.read.parquet(mix_path)
-        yield "ocr_scanned", lambda: extract_with_ocr(
-            mixed_pages, cache_probe=True) \
+        yield "ocr_scanned", lambda: extract_with_ocr(mixed_pages) \
             .agg(F.sum("n_words"), F.count("*")).collect()
         # encrypted corpus materialized ONCE (like the headline pages):
         # fixture ENCRYPTION is writer-side test infrastructure; the
@@ -270,17 +269,11 @@ def main() -> int:
             .agg(F.sum("n_words"), F.sum(F.length("pdf")),
                  F.count("*")).collect()
 
-    from pdf_ocr_engine_spark.plans.cache import release_tracked
-
     aux_queries = {}
     for name, fn in aux_runs():
         t0 = time.perf_counter()
         fn()
         aux_queries[f"{name}_sec"] = round(time.perf_counter() - t0, 3)
-        # the OCR router's cache_probe persist registers with plans.cache;
-        # free it before the next tier so its storage memory (binary
-        # payloads) never skews the following timings
-        release_tracked()
 
     print(json.dumps({
         "metric": "headline_queries_total_sec",

@@ -1644,8 +1644,8 @@ def _collect_drawn_images(doc: "_Doc", content: bytes, resources: Any,
 
 def detect_pages_text(data: bytes) -> list[bool]:
     """Cheap has-text detector: per-page boolean WITHOUT font loading,
-    ToUnicode/encoding resolution, or word-box building — the probe tier
-    of the OCR router (``operators/ocr.py``), ~3-5× cheaper than
+    ToUnicode/encoding resolution, or word-box building — the probe of
+    the OCR gate (``operators/ocr.py``), ~3-5× cheaper than
     :func:`parse_real_pdf` on font-heavy documents.
 
     A page "has text" when any show operator (Tj/TJ/'/\") draws a string

@@ -114,17 +114,56 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
     the reference's singleton tesseract worker (``ocr.ts:20-48``).  Pass a
     factory, not a recognizer: model handles don't pickle; the closure
     ships the recipe and the executor builds the instance."""
-    opts = options or DEFAULT_OPTIONS
+    return _extract_pages(df, options or DEFAULT_OPTIONS, recognizer_factory)
+
+
+def _extract_pages(df: DataFrame, opts: ExtractOptions, recognizer_factory,
+                   ocr_gate=None) -> DataFrame:
+    """:func:`extract_pages`, optionally gated per document (see
+    :func:`_recognizer_picker`; ``operators.ocr`` passes its predicate)."""
     if not opts.emit_spans:
-        return _extract_pages_arrow(df, opts, recognizer_factory)
+        return _extract_pages_arrow(df, opts, recognizer_factory, ocr_gate)
     return _extract_pages_pandas(df, opts, emit_spans=True,
-                                 recognizer_factory=recognizer_factory)
+                                 recognizer_factory=recognizer_factory,
+                                 ocr_gate=ocr_gate)
+
+
+def _with_route(schema: StructType) -> StructType:
+    """``schema`` plus the trailing ``route`` column of a gated pass."""
+    return StructType(list(schema)
+                      + [StructField("route", StringType(), False)])
+
+
+def _recognizer_picker(recognizer_factory, ocr_gate):
+    """Per-task recognizer hand-out: ``payload -> (recognizer, route)``.
+
+    Ungated, the factory runs once at the task's init point and every
+    document is offered the recognizer (route ``None``).  With
+    ``ocr_gate`` (a ``payload -> bool`` predicate), only gated-in
+    documents get it (route ``"ocr"``, else ``"text"``), and the factory
+    runs when the task reaches its first such document, so a task of
+    born-digital documents never builds a model."""
+    if ocr_gate is None:
+        recognizer = recognizer_factory() if recognizer_factory else None
+        return lambda payload: (recognizer, None)
+    built: list = []
+
+    def pick(payload):
+        if not ocr_gate(payload):
+            return None, "text"
+        if not built:
+            built.append(recognizer_factory() if recognizer_factory
+                         else None)
+        return built[0], "ocr"
+    return pick
 
 
 def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
-                         recognizer_factory=None) -> DataFrame:
+                         recognizer_factory=None,
+                         ocr_gate=None) -> DataFrame:
     # captured driver-side: pre-forked python workers don't see driver env
     audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
+    schema = _with_route(EXTRACTED_SCHEMA) if ocr_gate else EXTRACTED_SCHEMA
 
     def run(batches):
         install_zip_guard()
@@ -134,9 +173,10 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
         pid = ctx.partitionId() if ctx is not None else -1
         # per-task init point (mirrors the reference's singleton worker):
         # executor assets (S6) load here, once, never in the batch loop —
-        # and the OCR model (when enabled) initializes here too
+        # and the OCR model (when enabled) initializes here too, or at the
+        # first gated-in document
         hyphen_ex = _load_hyphen_asset(opts, audit)
-        recognizer = recognizer_factory() if recognizer_factory else None
+        pick = _recognizer_picker(recognizer_factory, ocr_gate)
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -149,15 +189,19 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
                                       "n_pages", "n_words", "text",
                                       "n_fallbacks")}
             walls: list[int] = []
+            routes: list[str | None] = []
             for payload, lang in zip(payloads, langs):
+                recognizer, route = pick(payload)
                 t0 = time.perf_counter_ns()
                 r = extract_document(payload, lang, opts, hyphen_ex,
                                      recognizer)
                 walls.append((time.perf_counter_ns() - t0) // 1000)
+                routes.append(route)
                 for k in cols:
                     cols[k].append(r[k])
             ts = (b.column("warc_ts") if "warc_ts" in b.schema.names
                   else pa.nulls(n, pa.timestamp("us")))
+            route_col = [pa.array(routes, pa.string())] if ocr_gate else []
             yield pa.record_batch([
                 b.column("url"), ts,
                 pa.array(langs, pa.string()),
@@ -171,15 +215,17 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
                 pa.array(cols["n_fallbacks"], pa.int32()),
                 pa.array([pid] * n, pa.int32()),
                 pa.array(walls, pa.int64()),
-            ], names=[f.name for f in EXTRACTED_SCHEMA.fields])
+                *route_col,
+            ], names=schema.names)
 
     wanted = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    return df.select(*wanted).mapInArrow(run, EXTRACTED_SCHEMA)
+    return df.select(*wanted).mapInArrow(run, schema)
 
 
 def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
                           emit_spans: bool,
-                          recognizer_factory=None) -> DataFrame:
+                          recognizer_factory=None,
+                          ocr_gate=None) -> DataFrame:
     audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -190,9 +236,10 @@ def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
         pid = ctx.partitionId() if ctx is not None else -1
         # per-task init point (mirrors the reference's singleton worker);
         # executor assets (S6) load here, and model-backed decoders
-        # (the OCR recognizer included) initialize here.
+        # (the OCR recognizer included) initialize here, or at the first
+        # gated-in document.
         hyphen_ex = _load_hyphen_asset(opts, audit)
-        recognizer = recognizer_factory() if recognizer_factory else None
+        pick = _recognizer_picker(recognizer_factory, ocr_gate)
         for batch in batches:
             n = len(batch)
             if n == 0:
@@ -206,8 +253,10 @@ def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
             cols: dict[str, list] = {k: [] for k in
                                      ("kind", "status", "error", "n_bytes",
                                       "n_pages", "n_words", "text",
-                                      "n_fallbacks", "wall_us", "spans")}
+                                      "n_fallbacks", "wall_us", "spans",
+                                      "route")}
             for payload, lang in zip(payloads, langs):
+                recognizer, route = pick(payload)
                 t0 = time.perf_counter_ns()
                 # no bytes() here: extract_document type-guards the payload
                 # itself (errors-as-values even for mis-typed columns)
@@ -223,10 +272,12 @@ def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
                 cols["text"].append(r["text"])
                 cols["n_fallbacks"].append(r["n_fallbacks"])
                 cols["wall_us"].append(wall)
+                cols["route"].append(route)
                 if emit_spans:
                     cols["spans"].append(r.get("spans") or [])
 
             spans_col = {"spans": cols["spans"]} if emit_spans else {}
+            route_col = {"route": cols["route"]} if ocr_gate else {}
             yield pd.DataFrame({
                 "url": urls,
                 "warc_ts": ts.reset_index(drop=True),
@@ -242,10 +293,13 @@ def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
                 "partition_id": pd.Series([pid] * n, dtype="int32"),
                 "wall_us": pd.Series(cols["wall_us"], dtype="int64"),
                 **spans_col,
+                **route_col,
             })
 
     # column pruning: request only what the stage reads, so the scan's
     # ReadSchema shrinks to 4 columns even on wide input tables.
     wanted = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
     schema = EXTRACTED_SCHEMA_SPANS if emit_spans else EXTRACTED_SCHEMA
+    if ocr_gate:
+        schema = _with_route(schema)
     return df.select(*wanted).mapInPandas(run, schema)

@@ -1,4 +1,4 @@
-"""Scanned/image-only OCR tier — recognizer plug point + F6 plan router.
+"""Scanned/image-only OCR tier — recognizer plug point + F6 document gate.
 
 The reference exists to convert *scanned* PDFs: detect pages with no real
 text (``src/lib/ocr/extractor.ts:78-103`` ``detectPagesWithRealText``),
@@ -9,37 +9,33 @@ its Spark shape:
 * :func:`deterministic_recognizer` — the sandbox recognizer: reads the
   ``FAKERAST`` page raster (``core/pdfscan.py``).  A real model swaps in
   by providing a different factory (e.g. ``lambda: TesseractWorker(...)``)
-  — the factory runs ONCE per task at the UDF init point, so model load
-  never sits in the batch loop (the reference's singleton worker,
-  ``ocr.ts:20-48``; its README's "64x faster" note is exactly this).
-* :func:`with_needs_ocr` — the cheap probe: parses metadata + the
-  has-text detector only, appending a boolean ``needs_ocr`` column.
-  Narrow (zero shuffle), payload passes through as the same Arrow column.
-* :func:`extract_with_ocr` — the F6 plan gate: ``needs_ocr`` splits the
-  corpus; the cheap branch runs text-layer extraction, the expensive
-  branch runs the SAME operator with the recognizer plugged in, and the
-  union is the output.  At 100 TB the two branches would read a
-  materialized probe output partitioned by ``needs_ocr`` (partition
-  pruning gives each stage only its own documents — the GPU pool never
-  sees born-digital docs); in one session, pass ``cache_probe=True``
-  to compute the probe once.
+  — the factory runs at most ONCE per task, never in the batch loop (the
+  reference's singleton worker, ``ocr.ts:20-48``; its README's "64x
+  faster" note is exactly this).
+* :func:`extract_with_ocr` — the F6 gate inside the one extract pass:
+  each document is tested with the cheap :func:`_doc_needs_ocr` probe
+  (the reference's skip predicate, ``index.ts:94-97``) and only gated-in
+  documents are offered the recognizer.  A ``route`` column records the
+  decision.
+* :func:`with_needs_ocr` — the same probe as a standalone pass appending
+  a boolean ``needs_ocr`` column (routing diagnostics, and the probe
+  prefix the benchmark's trace times).
 
-Scale note: the probe costs a metadata+content-stream parse (~ms/doc);
-the OCR stage costs model inference (~seconds/page on real models).
-Splitting at the plan level is what lets the expensive stage run on its
-own (accelerated, smaller) executor pool and lets AQE size each branch
-independently — per-page routing inside one monolithic stage could not.
+Why in-stage: every pass over the pages ships each payload across the
+JVM↔Python boundary.  A plan-level split (probe pass, persisted probe,
+two filtered extract branches, union) pays that crossing twice per
+document plus a cached copy of every payload; the in-stage gate pays it
+once, with the same rows (measured in CHANGES.md).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
 from ..core.extract_doc import DEFAULT_OPTIONS, ExtractOptions
 from ..zipguard import install_zip_guard
-from .extract import extract_pages
+from .extract import _extract_pages
 
 __all__ = [
     "deterministic_recognizer",
@@ -233,9 +229,9 @@ def _doc_needs_ocr(payload) -> bool:
     text layer — the document-level F6 predicate (page-level skipping
     happens again inside the extract stage).  Uses the CHEAP detector
     (``detect_pages_text``: content-stream scan, no font loading, no
-    word-box building) — a probe false-positive only routes a document to
-    the expensive branch, where the full parser still extracts it
-    correctly; it can never lose text."""
+    word-box building) — a probe false-positive only offers a document
+    the recognizer, and the full parser still extracts it correctly; it
+    can never lose text."""
     from ..core.pdfbin import sniff_kind
     from ..core.pdfreal import detect_pages_text, is_real_pdf
 
@@ -279,34 +275,26 @@ def extract_with_ocr(
     recognizer_factory=deterministic_recognizer,
     cache_probe: bool = False,
 ) -> DataFrame:
-    """The routed extraction DAG (F6 at the plan level)::
+    """The routed extraction pass (F6 per document, one stage)::
 
-        pages ─ probe(needs_ocr) ─┬─ filter(¬needs_ocr) → extract (cheap)
-                                  └─ filter(needs_ocr)  → extract+OCR
-                                  → union (+ ``route`` lineage column)
+        pages ─ extract ─┬─ ¬needs_ocr(doc) → extract_document(doc)
+                         └─ needs_ocr(doc)  → extract_document(doc, rec)
+                         → rows (+ ``route`` lineage column)
 
-    Both branches run :func:`operators.extract.extract_pages` — the OCR
-    branch just plugs the recognizer into the same operator, so statuses,
-    guards, spans, and lineage columns stay identical.  The ``route``
-    column records which branch produced each row (plan-gate evidence the
-    oracle value-checks).
+    One narrow ``mapInArrow`` (``mapInPandas`` with ``emit_spans``): the
+    :func:`operators.extract.extract_pages` body, with the recognizer
+    offered only to documents :func:`_doc_needs_ocr` flags — so statuses,
+    guards, spans, and lineage columns match :func:`extract_pages`.  The
+    factory runs once per task, at the task's first flagged document; a
+    task holding only born-digital documents never builds a model.  The
+    ``route`` column (``"ocr"`` / ``"text"``) records each decision (gate
+    evidence the oracle value-checks); ``wall_us`` still times
+    ``extract_document`` alone, not the probe.
 
-    ``cache_probe`` persists the probe output so the two branch scans
-    don't re-parse every document; the caller owns the lifecycle via the
-    returned DataFrame's lineage (unpersist after materializing).  At
-    100 TB, write the probe output partitioned by ``needs_ocr`` instead
-    and let each branch scan prune to its own partition.
+    ``cache_probe`` is ignored: there is no separate probe to persist any
+    more.  It stays in the signature only for the benchmark harness
+    (``perfbench``), which still passes it.
     """
-    opts = options or DEFAULT_OPTIONS
-    probed = with_needs_ocr(df)
-    if cache_probe:
-        from ..plans.cache import track
-        probed = track(probed.persist())  # released via release_tracked()
-    text_in = probed.filter(~F.col("needs_ocr")).drop("needs_ocr")
-    ocr_in = probed.filter(F.col("needs_ocr")).drop("needs_ocr")
-    text_out = extract_pages(text_in, opts) \
-        .withColumn("route", F.lit("text"))
-    ocr_out = extract_pages(ocr_in, opts,
-                            recognizer_factory=recognizer_factory) \
-        .withColumn("route", F.lit("ocr"))
-    return text_out.unionByName(ocr_out)
+    del cache_probe
+    return _extract_pages(df, options or DEFAULT_OPTIONS, recognizer_factory,
+                          ocr_gate=_doc_needs_ocr)

@@ -178,19 +178,17 @@ def q_ocr_scanned(spark: SparkSession, sf_dir: str) -> DataFrame:
     use case, README.md:13-29): a mixed corpus where odd doc_ids are
     genuine *image-only* PDFs (no text operators; pages embed a raster of
     the word grid) and even doc_ids are born-digital text-layer PDFs.  The
-    plan-level F6 gate (``operators/ocr.extract_with_ocr``) probes
-    ``needs_ocr``, routes each half to its branch, and the OCR branch runs
-    rasterize→recognize→layout with the deterministic recognizer (swap-in
-    point for a real model).  The oracle recomputes text, counts, AND the
-    route per document — a misrouted doc (or a recognizer that lost words)
-    hash-mismatches."""
+    F6 gate (``operators/ocr.extract_with_ocr``) runs inside the one
+    extract pass: each document is probed for ``needs_ocr``, and only
+    flagged documents run rasterize→recognize→layout with the
+    deterministic recognizer (swap-in point for a real model).  The oracle
+    recomputes text, counts, AND the route per document — a misrouted doc
+    (or a recognizer that lost words) hash-mismatches."""
     from .operators.ocr import extract_with_ocr
     from .sources.testdata import mixed_scan_pages_from_documents
 
     pages = mixed_scan_pages_from_documents(spark, sf_dir)
-    # cache_probe registers the persisted probe with plans.cache — released
-    # when the next registry query starts
-    out = extract_with_ocr(pages, cache_probe=True)
+    out = extract_with_ocr(pages)
     return out.select(
         F.element_at(F.split("url", "/"), -1).cast("long").alias("doc_id"),
         F.col("route"),

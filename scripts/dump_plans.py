@@ -37,9 +37,10 @@ SHOWCASE = {
     "dedup_embedding_lsh": ("banded signature equi-join on (band, val); "
                             "exact cosine only inside colliding buckets"),
     "resize_images": "narrow mapInPandas chain — binary in, binary out",
-    "ocr_scanned": ("F6 plan gate: probe → filter split → union of two "
-                    "narrow extract branches, ZERO Exchange; the expensive "
-                    "OCR branch only ever scans needs_ocr documents"),
+    "ocr_scanned": ("F6 gate inside the one extract pass: a single "
+                    "MapInArrow over the scan, ZERO Exchange, no Union, "
+                    "no InMemory cache; the recognizer only sees "
+                    "needs_ocr documents"),
     "extract_encrypted": ("transparent decryption stays inside the narrow "
                           "MapInArrow — no plan difference vs plain "
                           "extraction"),

@@ -219,6 +219,100 @@ class TestRouter:
         assert out[0].route == "text"  # plan gate kept it on the cheap side
 
 
+def _mixed_rows():
+    """(url, payload, lang) over every routing case: born-digital plain,
+    TrueType, encrypted and empty-page PDFs, FAKERAST and pixel scans, a
+    hybrid text+scan PDF, HTML, garbage bytes and a null payload."""
+    from pdf_ocr_engine_spark.sources.fixtures import (
+        text_to_encrypted_pdf_payload,
+        text_to_pixel_scanned_pdf_payload,
+        text_to_truetype_pdf_payload,
+    )
+
+    payloads = [
+        text_to_real_pdf_payload("plain born digital words"),
+        text_to_truetype_pdf_payload("truetype born digital words"),
+        text_to_encrypted_pdf_payload("encrypted born digital words"),
+        text_to_scanned_pdf_payload("fake raster scanned words"),
+        text_to_pixel_scanned_pdf_payload("pixel scanned words",
+                                          codec="jpeg"),
+        _hybrid_pdf(["digital", "half"], ["scanned", "half"]),
+        text_to_real_pdf_payload(""),
+        b"<html><body><p>eight plain words in one kept paragraph"
+        b"</p></body></html>",
+        b"\x00garbage bytes, not any document",
+        None,
+    ]
+    return [(f"https://x.example/doc/{i}", p, "eng")
+            for i, p in enumerate(payloads)]
+
+
+@pytest.mark.usefixtures("spark")
+class TestInStageGate:
+    """The F6 gate inside the one extract pass: each document is
+    extracted with the recognizer iff the probe flags it, and the
+    factory is built only for flagged documents."""
+
+    def test_rows_match_driver_side_routing(self, spark):
+        from pdf_ocr_engine_spark.operators.ocr import (
+            _doc_needs_ocr,
+            extract_with_ocr,
+        )
+
+        rows = _mixed_rows()
+        df = spark.createDataFrame(rows,
+                                   "url string, html binary, lang string")
+        got = {r.url: r.asDict() for r in extract_with_ocr(df).collect()}
+        rec = deterministic_recognizer()
+        routes = set()
+        for url, payload, lang in rows:
+            needs = _doc_needs_ocr(payload)
+            want = extract_document(payload, lang,
+                                    recognizer=rec if needs else None)
+            want.update(url=url, lang=lang, warc_ts=None,
+                        route="ocr" if needs else "text")
+            row = got.pop(url)
+            del row["wall_us"], row["partition_id"]
+            assert row == want, url
+            routes.add(want["route"])
+        assert not got
+        assert routes == {"ocr", "text"}
+
+    def test_factory_never_invoked_without_flagged_docs(self, spark):
+        from pdf_ocr_engine_spark.operators.ocr import extract_with_ocr
+
+        def refusing_factory():
+            raise AssertionError("recognizer built for born-digital docs")
+
+        rows = [(f"https://x.example/doc/{i}",
+                 text_to_real_pdf_payload(f"digital words number {i}"))
+                for i in range(8)]
+        df = spark.createDataFrame(rows, "url string, html binary") \
+            .repartition(4)
+        out = extract_with_ocr(df, recognizer_factory=refusing_factory) \
+            .collect()
+        assert len(out) == 8
+        assert {(r.status, r.route) for r in out} == {("ok", "text")}
+
+    def test_spans_survive_the_gate(self, spark):
+        from pdf_ocr_engine_spark.core.extract_doc import ExtractOptions
+        from pdf_ocr_engine_spark.operators.ocr import extract_with_ocr
+
+        rows = [("https://x.example/doc/0",
+                 text_to_real_pdf_payload("digital span words")),
+                ("https://x.example/doc/1",
+                 text_to_scanned_pdf_payload("scanned span words"))]
+        df = spark.createDataFrame(rows, "url string, html binary")
+        out = {r.url: r for r in extract_with_ocr(
+            df, ExtractOptions(emit_spans=True)).collect()}
+        for url, route, words in (
+                ("https://x.example/doc/0", "text", "digital span words"),
+                ("https://x.example/doc/1", "ocr", "scanned span words")):
+            r = out[url]
+            assert r.route == route
+            assert [s.raw for s in r.spans] == words.split()
+
+
 def _hybrid_pdf(text_tokens, scan_tokens):
     """One genuine PDF: page 1 carries a text layer, page 2 is image-only
     (raster of scan_tokens) — the per-PAGE F6 predicate inside one doc."""

@@ -4,6 +4,8 @@ parquet, small dims broadcast, the extract stage stays narrow, top-k never
 global-sorts.  A plan regression here is a scale bug even when every
 correctness test stays green."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -124,15 +126,22 @@ def test_ann_topk_single_row_broadcast(spark):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_ocr_router_branches_stay_narrow(spark, fixture_pages_path):
-    """The F6 routed plan: probe + filter + extract per branch must add NO
-    shuffle — routing is a narrow predicate, not a repartition."""
+def test_ocr_router_is_one_narrow_pass(spark, fixture_pages_path):
+    """The F6 gate runs inside the one extract pass: a single MapInArrow
+    over the scan — no shuffle, no branch union, no persisted probe."""
     from pdf_ocr_engine_spark.operators.ocr import extract_with_ocr
 
     pages = spark.read.parquet(fixture_pages_path)
     plan = plan_str(extract_with_ocr(pages), "simple")
-    assert "Exchange" not in plan, plan
-    assert plan.count("Union") == 1, plan
+    # operator names, top down ("+- *(1) ColumnarToRow" -> "ColumnarToRow")
+    nodes = [re.match(r"[\s+:-]*(?:\*\(\d+\)\s*)?(\w+)", ln).group(1)
+             for ln in plan.splitlines()[1:] if ln.strip()]
+    assert not [n for n in nodes if n in ("Exchange", "Union")
+                or n.startswith("InMemory")], plan
+    assert nodes.count("MapInArrow") == 1, plan
+    below = nodes[nodes.index("MapInArrow") + 1:]
+    assert below[-1] == "FileScan", plan
+    assert set(below) <= {"Project", "ColumnarToRow", "FileScan"}, plan
 
 
 def test_ivf_probe_broadcasts_query(spark):

@@ -180,6 +180,20 @@ class TestHardeningReviewFixes:
             sfnt._cmap_subtable(sub)
         assert time.monotonic() - t0 < 2.0
 
+    def test_format12_large_group_maps_in_full(self):
+        # one contiguous group wider than 0xFFFF codes (CJK/full-repertoire
+        # fonts emit these) is legal; only the code budget bounds it
+        sub = struct.pack(">HHIII", 12, 0, 16 + 12, 0, 1) \
+            + struct.pack(">III", 0x20000, 0x30000, 5)
+        got = sfnt._cmap_subtable(sub)
+        assert len(got) == 0x10001
+        assert got[0x20000] == 5 and got[0x30000] == 5 + 0x10000
+        # groups whose total exceeds the budget still raise
+        groups = struct.pack(">III", 0, 0x10000, 1) * 2
+        sub = struct.pack(">HHIII", 12, 0, 16 + len(groups), 0, 2) + groups
+        with pytest.raises(sfnt.SfntError, match="budget"):
+            sfnt._cmap_subtable(sub)
+
     def test_mac_roman_high_codes_not_fabricated(self):
         # (1,0) cmap: 0x8E is Mac Roman 'é', NOT U+008E — the inversion
         # must skip high codes and let post names cover those gids
