@@ -10,12 +10,10 @@ native dependency that a byte-identity contract cannot tolerate; everything
 from the flattened word list onward — the reference's actual algorithmic
 contribution — is reproduced exactly (see ``core/layout.py``).
 
-Two container flavors, dispatched on the second header line:
-
-**WBOX2 (default, binary)** — the scale format.  Little-endian, decoded with
-``numpy.frombuffer`` into coordinate arrays with near-zero per-word
-allocation (JSON decode was the pipeline's memory-bandwidth hot spot — at 32
-cores on one socket, allocation-heavy decode stops scaling long before
+The container is **WBOX2**, a binary scale format.  Little-endian, decoded
+with ``numpy.frombuffer`` into coordinate arrays with near-zero per-word
+allocation (a JSON container was the pipeline's memory-bandwidth hot spot —
+at 32 cores on one socket, allocation-heavy decode stops scaling long before
 arithmetic does)::
 
     %PDF-1.7\\n%WBOX2\\n
@@ -27,27 +25,19 @@ arithmetic does)::
       utf-8 text blob
     \\n%%EOF
 
-**WBOX1 (legacy, JSON)** — one-line JSON document ``{"page_count": N,
-"pages": [{"page_no", "width", "height", "has_text", "words": [[text, x0,
-y0, x1, y1, confidence], ...]}]}``; still decoded for old fixtures.
-
 ``page_count`` is declared independently of ``len(pages)`` so fixtures can
 exercise the reference's page-extraction-mismatch invariant
 (``src/lib/ocr/index.ts:109-119``).  ``has_text`` drives the OCR-skip
 predicate (``index.ts:94-97``).  NaN coordinates are carried natively (f64)
-in WBOX2 / as JSON ``NaN`` in WBOX1 to exercise the validity filter
-(``builder.ts:25``).
+to exercise the validity filter (``builder.ts:25``).
 """
 
 from __future__ import annotations
 
-import json
-import math
 import struct
 from typing import Any
 
 MAGIC = b"%PDF-"
-_HEADER = b"%PDF-1.7\n%WBOX1\n"
 _HEADER2 = b"%PDF-1.7\n%WBOX2\n"
 _FOOTER = b"\n%%EOF"
 
@@ -94,35 +84,6 @@ def encode_pdf(
         parts.append(blob)
     parts.append(_FOOTER)
     return b"".join(parts)
-
-
-def encode_pdf_json(
-    pages: list[dict[str, Any]],
-    page_count: int | None = None,
-) -> bytes:
-    """Encode the legacy WBOX1 (JSON) flavor — kept for decoder coverage."""
-    norm_pages = []
-    for p in pages:
-        words = [
-            [w[0], float(w[1]), float(w[2]), float(w[3]), float(w[4]),
-             float(w[5]) if len(w) > 5 else 90.0]
-            for w in p.get("words", [])
-        ]
-        norm_pages.append(
-            {
-                "page_no": int(p["page_no"]),
-                "width": float(p.get("width", 612.0)),
-                "height": float(p.get("height", 792.0)),
-                "has_text": bool(p.get("has_text", False)),
-                "words": words,
-            }
-        )
-    doc = {
-        "page_count": len(pages) if page_count is None else int(page_count),
-        "pages": norm_pages,
-    }
-    payload = json.dumps(doc, ensure_ascii=False, separators=(",", ":"))
-    return _HEADER + payload.encode("utf-8") + _FOOTER
 
 
 #: pdf.js-style header recovery window: crawl PDFs frequently carry leading
@@ -173,8 +134,6 @@ def decode_pdf_arrays(data: bytes) -> dict[str, Any]:
         if off <= 0:
             raise ValueError("not a PDF payload (missing %PDF- magic)")
         data = data[off:]
-    if data.startswith(_HEADER):
-        return _arrays_from_json(data)
     if not data.startswith(_HEADER2):
         # Genuine PDF (content streams, not a WBOX container): parse the
         # real text layer (core/pdfreal.py).  Same return shape, plus
@@ -230,64 +189,3 @@ def decode_pdf_arrays(data: bytes) -> dict[str, Any]:
         raise
     except Exception as exc:  # noqa: BLE001 - becomes a status column
         raise ValueError(f"corrupt word-box record: {exc}") from exc
-
-
-def _arrays_from_json(data: bytes) -> dict[str, Any]:
-    """WBOX1 (JSON) → the same array shape as :func:`decode_pdf_arrays`."""
-    import numpy as np
-
-    doc = _decode_json_doc(data)
-    pages = []
-    for p in doc["pages"]:
-        words = p.get("words") or []
-        coords = np.empty((len(words), 5), dtype="f8")
-        texts = []
-        for i, w in enumerate(words):
-            texts.append(w[0])
-            coords[i, :4] = w[1:5]
-            coords[i, 4] = w[5] if len(w) > 5 else 90.0
-        pages.append({"page_no": p["page_no"],
-                      "width": p.get("width", 612.0),
-                      "height": p.get("height", 792.0),
-                      "has_text": bool(p.get("has_text", False)),
-                      "texts": texts, "coords": coords})
-    return {"page_count": doc["page_count"], "pages": pages}
-
-
-def _decode_json_doc(data: bytes) -> dict[str, Any]:
-    body = data[len(_HEADER):]
-    if body.endswith(_FOOTER):
-        body = body[: -len(_FOOTER)]
-    try:
-        doc = json.loads(body.decode("utf-8"))
-    except Exception as exc:  # noqa: BLE001 - becomes a status column
-        raise ValueError(f"corrupt word-box record: {exc}") from exc
-    if not isinstance(doc, dict) or "pages" not in doc or "page_count" not in doc:
-        raise ValueError("corrupt word-box record: missing keys")
-    for p in doc["pages"]:
-        # JSON null coordinates (from non-finite floats round-tripped through
-        # strict encoders) decode to NaN so the validity filter sees them.
-        for w in p.get("words") or []:
-            for i in range(1, 5):
-                if w[i] is None:
-                    w[i] = math.nan
-    return doc
-
-
-def decode_pdf(data: bytes) -> dict[str, Any]:
-    """Decode the word-box container into the list-of-word-lists shape
-    (compat surface for tests and the reference-port layout oracle).  The
-    pipeline's hot path uses :func:`decode_pdf_arrays` instead."""
-    if data[:5] != MAGIC:
-        off = data.find(MAGIC, 0, HEADER_SCAN)
-        if off <= 0:
-            raise ValueError("not a PDF payload (missing %PDF- magic)")
-        data = data[off:]
-    if data.startswith(_HEADER):
-        return _decode_json_doc(data)
-    doc = decode_pdf_arrays(data)
-    for p in doc["pages"]:
-        coords = p.pop("coords")
-        texts = p.pop("texts")
-        p["words"] = [[t, *coords[i].tolist()] for i, t in enumerate(texts)]
-    return doc

@@ -5,7 +5,8 @@
 with one ``mapInArrow`` in **iterator form**: per-task init happens once and
 is amortized over all Arrow batches — the Spark analog of the reference's
 singleton OCR worker reused across pages (``src/lib/ocr/index.ts:99-103``,
-the "64x faster" design note in its README).
+the "64x faster" design note in its README).  Every variant (the positioned
+``spans`` column, the OCR gate of ``operators.ocr``) runs this one body.
 
 Scale notes (100 TB / 1000-executor design):
 * This is a **narrow** transformation — zero shuffle.  Parallelism is the
@@ -25,8 +26,6 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
 
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
@@ -43,9 +42,6 @@ from pyspark.sql.types import (
 
 from ..core.extract_doc import DEFAULT_OPTIONS, ExtractOptions, extract_document
 from ..zipguard import install_zip_guard
-
-if TYPE_CHECKING:  # pragma: no cover
-    import pandas as pd
 
 #: Output schema — explicit, never inferred (SURVEY.md §1.3).
 EXTRACTED_SCHEMA = StructType([
@@ -100,13 +96,11 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
                   recognizer_factory=None) -> DataFrame:
     """Sniff → guard → route → extract, one Arrow-batched pass, no shuffle.
 
-    The text path runs ``mapInArrow`` (pyarrow RecordBatch in/out — measured
-    ~30% faster than ``mapInPandas`` on binary-heavy rows: no pandas Series
+    One ``mapInArrow`` (pyarrow RecordBatch in/out: no pandas Series
     materialization, and the ``warc_ts`` column passes through as the same
     Arrow array untouched).  With ``options.emit_spans`` the output gains a
     ``spans`` array column (:data:`SPAN_SCHEMA`) carrying the positioned
-    word sequence per document; that opt-in path stays on ``mapInPandas``
-    for the nested-struct column assembly.
+    word sequence per document, built in the same pass.
 
     ``recognizer_factory`` (zero-arg callable returning an ``image_bytes →
     words`` recognizer) turns on the OCR tier for image-only real-PDF
@@ -115,23 +109,6 @@ def extract_pages(df: DataFrame, options: ExtractOptions | None = None,
     factory, not a recognizer: model handles don't pickle; the closure
     ships the recipe and the executor builds the instance."""
     return _extract_pages(df, options or DEFAULT_OPTIONS, recognizer_factory)
-
-
-def _extract_pages(df: DataFrame, opts: ExtractOptions, recognizer_factory,
-                   ocr_gate=None) -> DataFrame:
-    """:func:`extract_pages`, optionally gated per document (see
-    :func:`_recognizer_picker`; ``operators.ocr`` passes its predicate)."""
-    if not opts.emit_spans:
-        return _extract_pages_arrow(df, opts, recognizer_factory, ocr_gate)
-    return _extract_pages_pandas(df, opts, emit_spans=True,
-                                 recognizer_factory=recognizer_factory,
-                                 ocr_gate=ocr_gate)
-
-
-def _with_route(schema: StructType) -> StructType:
-    """``schema`` plus the trailing ``route`` column of a gated pass."""
-    return StructType(list(schema)
-                      + [StructField("route", StringType(), False)])
 
 
 def _recognizer_picker(recognizer_factory, ocr_gate):
@@ -158,12 +135,18 @@ def _recognizer_picker(recognizer_factory, ocr_gate):
     return pick
 
 
-def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
-                         recognizer_factory=None,
-                         ocr_gate=None) -> DataFrame:
+def _extract_pages(df: DataFrame, opts: ExtractOptions,
+                   recognizer_factory=None, ocr_gate=None) -> DataFrame:
+    """:func:`extract_pages`, optionally gated per document (see
+    :func:`_recognizer_picker`; ``operators.ocr`` passes its predicate)."""
     # captured driver-side: pre-forked python workers don't see driver env
     audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
-    schema = _with_route(EXTRACTED_SCHEMA) if ocr_gate else EXTRACTED_SCHEMA
+    emit_spans = opts.emit_spans
+    schema = EXTRACTED_SCHEMA_SPANS if emit_spans else EXTRACTED_SCHEMA
+    if ocr_gate:
+        # a gated pass records each decision in a trailing route column
+        schema = StructType(list(schema)
+                            + [StructField("route", StringType(), False)])
 
     def run(batches):
         install_zip_guard()
@@ -177,6 +160,10 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
         # first gated-in document
         hyphen_ex = _load_hyphen_asset(opts, audit)
         pick = _recognizer_picker(recognizer_factory, ocr_gate)
+        if emit_spans:
+            from pyspark.sql.pandas.types import to_arrow_type
+            spans_type = to_arrow_type(
+                EXTRACTED_SCHEMA_SPANS["spans"].dataType)
         for b in batches:
             n = b.num_rows
             if n == 0:
@@ -190,6 +177,7 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
                                       "n_fallbacks")}
             walls: list[int] = []
             routes: list[str | None] = []
+            spans: list[list] = []
             for payload, lang in zip(payloads, langs):
                 recognizer, route = pick(payload)
                 t0 = time.perf_counter_ns()
@@ -199,8 +187,12 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
                 routes.append(route)
                 for k in cols:
                     cols[k].append(r[k])
+                if emit_spans:
+                    # a document without spans gets an empty list, not null
+                    spans.append(r.get("spans") or [])
             ts = (b.column("warc_ts") if "warc_ts" in b.schema.names
                   else pa.nulls(n, pa.timestamp("us")))
+            spans_col = [pa.array(spans, spans_type)] if emit_spans else []
             route_col = [pa.array(routes, pa.string())] if ocr_gate else []
             yield pa.record_batch([
                 b.column("url"), ts,
@@ -215,91 +207,11 @@ def _extract_pages_arrow(df: DataFrame, opts: ExtractOptions,
                 pa.array(cols["n_fallbacks"], pa.int32()),
                 pa.array([pid] * n, pa.int32()),
                 pa.array(walls, pa.int64()),
+                *spans_col,
                 *route_col,
             ], names=schema.names)
-
-    wanted = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    return df.select(*wanted).mapInArrow(run, schema)
-
-
-def _extract_pages_pandas(df: DataFrame, opts: ExtractOptions,
-                          emit_spans: bool,
-                          recognizer_factory=None,
-                          ocr_gate=None) -> DataFrame:
-    audit = os.environ.get("SPARK_GRAFT_ASSET_AUDIT")
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        install_zip_guard()
-        import pandas as pd  # executor-side import
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else -1
-        # per-task init point (mirrors the reference's singleton worker);
-        # executor assets (S6) load here, and model-backed decoders
-        # (the OCR recognizer included) initialize here, or at the first
-        # gated-in document.
-        hyphen_ex = _load_hyphen_asset(opts, audit)
-        pick = _recognizer_picker(recognizer_factory, ocr_gate)
-        for batch in batches:
-            n = len(batch)
-            if n == 0:
-                continue
-            urls = batch["url"].tolist()
-            langs = batch["lang"].tolist() if "lang" in batch else [None] * n
-            payloads = batch["html"].tolist()
-            ts = (batch["warc_ts"] if "warc_ts" in batch
-                  else pd.Series([pd.NaT] * n))
-
-            cols: dict[str, list] = {k: [] for k in
-                                     ("kind", "status", "error", "n_bytes",
-                                      "n_pages", "n_words", "text",
-                                      "n_fallbacks", "wall_us", "spans",
-                                      "route")}
-            for payload, lang in zip(payloads, langs):
-                recognizer, route = pick(payload)
-                t0 = time.perf_counter_ns()
-                # no bytes() here: extract_document type-guards the payload
-                # itself (errors-as-values even for mis-typed columns)
-                r = extract_document(payload, lang, opts, hyphen_ex,
-                                     recognizer)
-                wall = (time.perf_counter_ns() - t0) // 1000
-                cols["kind"].append(r["kind"])
-                cols["status"].append(r["status"])
-                cols["error"].append(r["error"])
-                cols["n_bytes"].append(r["n_bytes"])
-                cols["n_pages"].append(r["n_pages"])
-                cols["n_words"].append(r["n_words"])
-                cols["text"].append(r["text"])
-                cols["n_fallbacks"].append(r["n_fallbacks"])
-                cols["wall_us"].append(wall)
-                cols["route"].append(route)
-                if emit_spans:
-                    cols["spans"].append(r.get("spans") or [])
-
-            spans_col = {"spans": cols["spans"]} if emit_spans else {}
-            route_col = {"route": cols["route"]} if ocr_gate else {}
-            yield pd.DataFrame({
-                "url": urls,
-                "warc_ts": ts.reset_index(drop=True),
-                "lang": langs,
-                "kind": cols["kind"],
-                "status": cols["status"],
-                "error": cols["error"],
-                "n_bytes": pd.Series(cols["n_bytes"], dtype="int64"),
-                "n_pages": pd.Series(cols["n_pages"], dtype="int32"),
-                "n_words": pd.Series(cols["n_words"], dtype="int32"),
-                "text": cols["text"],
-                "n_fallbacks": pd.Series(cols["n_fallbacks"], dtype="int32"),
-                "partition_id": pd.Series([pid] * n, dtype="int32"),
-                "wall_us": pd.Series(cols["wall_us"], dtype="int64"),
-                **spans_col,
-                **route_col,
-            })
 
     # column pruning: request only what the stage reads, so the scan's
     # ReadSchema shrinks to 4 columns even on wide input tables.
     wanted = [c for c in ("url", "warc_ts", "html", "lang") if c in df.columns]
-    schema = EXTRACTED_SCHEMA_SPANS if emit_spans else EXTRACTED_SCHEMA
-    if ocr_gate:
-        schema = _with_route(schema)
-    return df.select(*wanted).mapInPandas(run, schema)
+    return df.select(*wanted).mapInArrow(run, schema)

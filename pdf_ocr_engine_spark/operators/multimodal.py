@@ -409,8 +409,8 @@ def embed_media(df: DataFrame, dim: int = 64, media_col: str = "media",
     12-byte fake-codec header; raw bytes otherwise), pooled into ``dim``
     equal bins and L2-normalized.  Deterministic and closed-form, so the
     whole feature pipeline is oracle-checkable — and the operator shape is
-    exactly the extract operator's iterator-form ``mapInPandas`` with a
-    per-task init point (``operators/extract.py``): a real model (CLIP et
+    the extract operator's iterator form (``operators/extract.py``, there
+    over ``mapInArrow``) with a per-task init point: a real model (CLIP et
     al.) loads once per task where the pooling table is built, and only
     the per-blob line changes."""
     if dim < 1 or 256 % dim:

@@ -12,7 +12,8 @@ its Spark shape:
   — the factory runs at most ONCE per task, never in the batch loop (the
   reference's singleton worker, ``ocr.ts:20-48``; its README's "64x
   faster" note is exactly this).
-* :func:`extract_with_ocr` — the F6 gate inside the one extract pass:
+* :func:`extract_with_ocr` — the F6 gate inside the one extract pass
+  (the same ``mapInArrow`` body as ``extract_pages``, spans included):
   each document is tested with the cheap :func:`_doc_needs_ocr` probe
   (the reference's skip predicate, ``index.ts:94-97``) and only gated-in
   documents are offered the recognizer.  A ``route`` column records the
@@ -281,7 +282,7 @@ def extract_with_ocr(
                          └─ needs_ocr(doc)  → extract_document(doc, rec)
                          → rows (+ ``route`` lineage column)
 
-    One narrow ``mapInArrow`` (``mapInPandas`` with ``emit_spans``): the
+    One narrow ``mapInArrow``, with or without ``emit_spans``: the
     :func:`operators.extract.extract_pages` body, with the recognizer
     offered only to documents :func:`_doc_needs_ocr` flags — so statuses,
     guards, spans, and lineage columns match :func:`extract_pages`.  The

@@ -28,7 +28,7 @@ SHOWCASE = {
     "ann_cosine_topk": ("whole-stage codegen dot product, broadcast "
                         "single-row query join (no driver .first() job), "
                         "TakeOrderedAndProject"),
-    "extract_real_pdf": ("same narrow MapInArrow/MapInPandas shape as "
+    "extract_real_pdf": ("same narrow MapInArrow shape as "
                          "extract_documents — real-PDF parsing adds no "
                          "shuffle"),
     "dedup_minhash": ("banded LSH equi-join on (band, band_hash), exact "

@@ -12,7 +12,23 @@ from pdf_ocr_engine_spark.core.extract_doc import (
 )
 from pdf_ocr_engine_spark.core.hyphen import repair_hyphenation
 from pdf_ocr_engine_spark.core.html_extract import extract_main_text
-from pdf_ocr_engine_spark.core.pdfbin import decode_pdf, encode_pdf, sniff_kind
+from pdf_ocr_engine_spark.core.pdfbin import (
+    decode_pdf_arrays,
+    encode_pdf,
+    sniff_kind,
+)
+
+
+def decode_pdf(data):
+    """The container decoded to ``{"page_count", "pages": [{..., "words":
+    [[text, x0, y0, x1, y1, confidence], ...]}]}`` lists, for comparing
+    against what :func:`encode_pdf` was given."""
+    doc = decode_pdf_arrays(data)
+    for p in doc["pages"]:
+        coords = p.pop("coords")
+        p["words"] = [[t, *coords[i].tolist()]
+                      for i, t in enumerate(p.pop("texts"))]
+    return doc
 
 
 def page(page_no, words, has_text=False, width=612.0, height=792.0):
@@ -117,6 +133,10 @@ class TestGuards:
     def test_corrupt_pdf_is_value_not_exception(self):
         r = extract_document(b"%PDF-1.7\n%WBOX1\nnot-json\n%%EOF", "eng")
         assert r["status"] == "decode_error"
+        # a truncated WBOX2 record: the header, then 2 of the 8 count bytes
+        r = extract_document(b"%PDF-1.7\n%WBOX2\n\x01\x00", "eng")
+        assert r["status"] == "decode_error"
+        assert r["error"].startswith("corrupt word-box record: ")
 
     def test_guard_order_size_before_decode(self):
         # fail-fast ordering (route.ts:26-65): size guard fires before the

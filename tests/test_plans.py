@@ -9,6 +9,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
+from pdf_ocr_engine_spark.core.extract_doc import ExtractOptions
 from pdf_ocr_engine_spark.operators.extract import extract_pages
 from pdf_ocr_engine_spark.plans.pipeline import salted_repartition
 
@@ -36,10 +37,14 @@ def test_extract_scan_prunes_columns(spark, fixture_pages_path):
 
 
 def test_extract_is_narrow_no_shuffle(spark, fixture_pages_path):
-    """scan → mapInPandas with zero Exchange; the ONLY shuffle in the DAG is
-    the explicit salted repartition when requested."""
+    """scan → one mapInArrow with zero Exchange, spans or not; the ONLY
+    shuffle in the DAG is the explicit salted repartition when requested."""
     pages = spark.read.parquet(fixture_pages_path)
-    assert "Exchange" not in plan_str(extract_pages(pages))
+    for opts in (None, ExtractOptions(emit_spans=True)):
+        plan = plan_str(extract_pages(pages, opts), "simple")
+        assert "Exchange" not in plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert "MapInPandas" not in plan, plan
     # "simple" mode prints each node once (formatted repeats them in the
     # details section, which would double-count)
     salted = plan_str(extract_pages(salted_repartition(pages, 8)), "simple")
@@ -128,20 +133,22 @@ def test_ann_topk_single_row_broadcast(spark):
 
 def test_ocr_router_is_one_narrow_pass(spark, fixture_pages_path):
     """The F6 gate runs inside the one extract pass: a single MapInArrow
-    over the scan — no shuffle, no branch union, no persisted probe."""
+    over the scan, spans or not — no shuffle, no branch union, no
+    persisted probe."""
     from pdf_ocr_engine_spark.operators.ocr import extract_with_ocr
 
     pages = spark.read.parquet(fixture_pages_path)
-    plan = plan_str(extract_with_ocr(pages), "simple")
-    # operator names, top down ("+- *(1) ColumnarToRow" -> "ColumnarToRow")
-    nodes = [re.match(r"[\s+:-]*(?:\*\(\d+\)\s*)?(\w+)", ln).group(1)
-             for ln in plan.splitlines()[1:] if ln.strip()]
-    assert not [n for n in nodes if n in ("Exchange", "Union")
-                or n.startswith("InMemory")], plan
-    assert nodes.count("MapInArrow") == 1, plan
-    below = nodes[nodes.index("MapInArrow") + 1:]
-    assert below[-1] == "FileScan", plan
-    assert set(below) <= {"Project", "ColumnarToRow", "FileScan"}, plan
+    for opts in (None, ExtractOptions(emit_spans=True)):
+        plan = plan_str(extract_with_ocr(pages, opts), "simple")
+        # operator names, top down ("+- *(1) ColumnarToRow" -> "ColumnarToRow")
+        nodes = [re.match(r"[\s+:-]*(?:\*\(\d+\)\s*)?(\w+)", ln).group(1)
+                 for ln in plan.splitlines()[1:] if ln.strip()]
+        assert not [n for n in nodes if n in ("Exchange", "Union")
+                    or n.startswith("InMemory")], plan
+        assert nodes.count("MapInArrow") == 1, plan
+        below = nodes[nodes.index("MapInArrow") + 1:]
+        assert below[-1] == "FileScan", plan
+        assert set(below) <= {"Project", "ColumnarToRow", "FileScan"}, plan
 
 
 def test_ivf_probe_broadcasts_query(spark):

@@ -160,3 +160,46 @@ def test_large_document_stress(spark):
     assert row.n_pages == 150
     assert row.n_words == expected["n_words"] == 150 * 400
     assert row.text == expected["text"]
+
+
+def test_spans_column_matches_driver_side_extraction(spark):
+    """``extract_pages`` with ``emit_spans`` builds the ``spans`` column in
+    the same Arrow pass: each row's spans equal the driver-side
+    ``extract_document`` spans (``[]``, never null, where it gives none),
+    and every other column equals the run without spans."""
+    from pdf_ocr_engine_spark.core.extract_doc import (
+        ExtractOptions,
+        extract_document,
+    )
+    from pdf_ocr_engine_spark.operators.extract import extract_pages
+    from pdf_ocr_engine_spark.sources.fixtures import (
+        text_to_pdf_payload,
+        text_to_real_pdf_payload,
+    )
+
+    payloads = [
+        text_to_pdf_payload("word box container words " * 6),
+        text_to_real_pdf_payload("plain born digital words"),
+        b"<html><body><p>eight plain words in one kept paragraph"
+        b"</p></body></html>",
+        b"\x00garbage bytes, not any document",
+        None,
+    ]
+    rows = [(f"https://x.example/doc/{i}", p, "eng")
+            for i, p in enumerate(payloads)]
+    df = spark.createDataFrame(rows, "url string, html binary, lang string")
+    opts = ExtractOptions(emit_spans=True)
+    with_spans = {r.url: r.asDict() for r in extract_pages(df, opts).collect()}
+    without = {r.url: r.asDict() for r in extract_pages(df).collect()}
+    assert len(with_spans) == len(without) == len(rows)
+    n_spans = 0
+    for url, payload, lang in rows:
+        want = extract_document(payload, lang, opts).get("spans") or []
+        got = with_spans[url].pop("spans")
+        assert got is not None, url
+        assert [tuple(s) for s in got] == want, url
+        n_spans += len(want)
+        for row in (with_spans[url], without[url]):
+            del row["wall_us"], row["partition_id"]
+        assert with_spans[url] == without[url], url
+    assert n_spans > 0
